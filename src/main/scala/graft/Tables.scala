@@ -462,8 +462,6 @@ object Policy {
   import org.apache.spark.sql.Column
 
   val Dec4: DecimalType = DecimalType(18, 4)
-  /** Quantization for float32 embedding elements before exact arithmetic. */
-  val Dec6: DecimalType = DecimalType(18, 6)
 
   def dec(c: Column): Column = c.cast(Dec4)
   def dbl(c: Column): Column = c.cast(DoubleType)
@@ -498,7 +496,7 @@ object Policy {
   // DECIMAL(18,4) × DECIMAL(18,4) product runs through
   // java.math.BigDecimal (result precision 38 is past the compact-long
   // ceiling) and each double→decimal cast allocates — measured 1.27 s
-  // vs 0.48 s on q09's 600k-row aggregate job (R21Probe, 5-rep mins),
+  // vs 0.48 s on q09's 600k-row aggregate job (OPTIMIZATION_r21.md, 5-rep mins),
   // and that allocation traffic is what a bandwidth-contended 32-thread
   // box amplifies (the PERF_r20 q09/q101/q102/q103 anti-scaling
   // cluster). Fixture money columns are 2-DECIMAL by generator
@@ -510,9 +508,9 @@ object Policy {
   // integer.) Sums run over DECIMAL(38,0) integers — exact and
   // partition-order-free exactly like the decimal sums they replace,
   // compact-long-backed until 10¹⁸ — and ONE per-GROUP decimal
-  // division ((30,0)/(9,0) → (38,8), exact; R21Probe pins the typing)
-  // rescales before the SAME Dec4 HALF_UP cast and double conversion
-  // the old forms ended in. Equality with the decimal forms is pinned
+  // division ((30,0)/(9,0) → (38,8), exact; OPTIMIZATION_r21.md
+  // records the typing) rescales before the SAME Dec4 HALF_UP cast
+  // and double conversion the old forms ended in. Equality with the decimal forms is pinned
   // by MoneyUnitsSpec (per-value u4 ≡ dec unscaled on the real
   // fixtures; boundary-sum differentials for the rescale), and the
   // oracle/golden gates verify every declared query end to end.

@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.lsm.LsmIndex
+import graft.streaming.StreamingJobs
 
 /** Q22 + the LLM-training-data text operators over `documents`
   * (doc_id, text, lang, source, n_chars — FIXTURES.md §1).
@@ -3046,7 +3048,7 @@ object DocQueries {
     // derived from checkpointed inputs) — one concurrent wave; a crash
     // leaves either torn exactly as it could under the sequential
     // order, and redelivery overwrites both idempotently
-    parWrite(Seq(
+    LsmIndex.parWrite(Seq(
       () => bBands.join(broadcast(kept), Seq("doc_id"), "left_semi")
         .write.mode("overwrite").parquet(dBandsLoc),
       () => setsB.join(broadcast(kept), Seq("doc_id"), "left_semi")
@@ -3176,7 +3178,7 @@ object DocQueries {
   // way a production 100 TB pipeline actually runs it: as a Structured
   // Streaming job. The two ingest batches (the mod-0/mod-1 carve,
   // written as a two-file replay dir) arrive as AvailableNow
-  // micro-batches; each foreachBatch invocation dedups its batch
+  // micro-batches; each per-batch invocation dedups its batch
   // against the standing index (base ∪ the delta segments of EARLIER
   // batches only), appends the kept docs' bands/sets as the batch's
   // OWN delta segment, and writes the per-source funnel to the batch's
@@ -3199,71 +3201,21 @@ object DocQueries {
   // the index grows by exactly the admitted docs per batch. Fresh
   // sink/ckpt/delta dirs per run (Bench reps time the full replay,
   // like q79); plan consumers see only the sink read (q44 caveat).
-  /** One streaming ingest-dedup micro-batch — a pure function of
-    * (batchId, data): dedup vs base ∪ strictly-earlier deltas, append
-    * this batch's kept bands/sets as `batch=<id>`, write the funnel to
-    * the sink's `batch=<id>`. private[graft] for
-    * StreamIndexDedupSpec's redelivery law. */
-  private[graft] def streamDedupBatch(s: SparkSession, micro: DataFrame,
-      id: Long, baseBands: DataFrame, baseSets: DataFrame,
-      deltaBandsDir: String, deltaSetsDir: String, sinkDir: String,
-      crashBeforeSink: Long => Unit = _ => ()): Unit = {
-    // micro feeds three branches (shingles, kept anti-join, funnel):
-    // pin it once so the file slice is read once
-    val b = micro.localCheckpoint()
-    // EMPTY-TAIL ELISION (round 21, guide §2.4): when the listing
-    // proves no strictly-earlier segment exists (batch 0 of a fresh
-    // run), the base relation IS the index — skip the empty delta
-    // scan and the union. Same `batch < id` self-exclusion contract:
-    // a redelivered batch's own segment never qualifies either way.
-    def withPriorDelta(base: DataFrame, loc: String,
-        cols: Seq[String]): DataFrame =
-      if (!hasBatchIn(loc, Long.MinValue, id)) base
-      else base.union(s.read.parquet(loc).filter(col("batch") < id)
-        .select(cols.map(col): _*))
-    val near = ingestAndAppend(b,
-      withPriorDelta(
-        baseBands.select("doc_id", "band_idx", "band_val"),
-        deltaBandsDir, Seq("doc_id", "band_idx", "band_val")),
-      withPriorDelta(baseSets.select("doc_id", "ss", "n"),
-        deltaSetsDir, Seq("doc_id", "ss", "n")),
-      s"$deltaBandsDir/batch=$id", s"$deltaSetsDir/batch=$id",
-      graft.streaming.StreamingJobs.recordInnerPlan(
-        s"q110d_stream_index_dedup batch=$id", _))
-    // TORN-WRITE injection point (StreamIndexDedupSpec's crash law):
-    // the worst at-least-once case is a kill AFTER the segment write
-    // but BEFORE the sink write — the batch's delta exists, its commit
-    // doesn't, and the rerun must overwrite both to the one-shot bytes
-    crashBeforeSink(id)
-    dedupFunnel(b, near).coalesce(1)
-      .write.mode("overwrite").parquet(s"$sinkDir/batch=$id")
-  }
-
-  /** Run the full streaming ingest-dedup replay: drain the two-file
-    * replay through foreachBatch with AvailableNow. The `batch=-1`
-    * schema-seed writes are gone (round 21): batch 0's empty-tail
-    * read is elided by listing (hasBatchIn), so no seed segment —
-    * and no seed-write Spark job — is needed.
-    * private[graft] for StreamIndexDedupSpec. */
+  /** Run the streaming ingest-dedup replay: drain the two-file replay
+    * through the q110 per-batch function with folding off, so every
+    * batch reads base ∪ its strictly-earlier delta segments. No
+    * `batch=-1` schema seed: batch 0's empty-tail read is elided by
+    * listing. private[graft] for StreamIndexDedupSpec. */
   private[graft] def runStreamIndexDedup(s: SparkSession, dir: String,
       replayDir: String, deltaBandsDir: String, deltaSetsDir: String,
       sinkDir: String, ckpt: String,
       crashBeforeSink: Long => Unit = _ => ()): Unit = {
     val (iBands, iSets) = Tables.minhashIndexBase(s, dir)
-    val q = graft.streaming.StreamingJobs.readDocsStream(s, replayDir)
-      .writeStream
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         id: Long) =>
-          streamDedupBatch(s, df, id, iBands, iSets,
-            deltaBandsDir, deltaSetsDir, sinkDir, crashBeforeSink)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamingJobs.capturePlan(
-      "q110d_stream_index_dedup", q)
+    StreamingJobs.drainDocs(s, replayDir, ckpt,
+      "q110d_stream_index_dedup") { (df, id) =>
+      streamCompactBatch(s, df, id, iBands, iSets, deltaBandsDir,
+        deltaSetsDir, None, sinkDir, crashBeforeSink = crashBeforeSink)
+    }
   }
 
   /** Resolve the q110d sink change-log to the q110c report: each batch
@@ -3281,7 +3233,7 @@ object DocQueries {
   private val q110d = QueryDef(
     "q110d_stream_index_dedup",
     (s, dir) => {
-      val replay = graft.streaming.StreamingJobs.docsReplayDir(s, dir)
+      val replay = StreamingJobs.docsReplayDir(s, dir)
       // Scratch-registered (round-15 ADVICE item 2): fresh per run so
       // the reps time the full replay, deleted by the harness once the
       // sink read is consumed
@@ -3373,7 +3325,7 @@ object DocQueries {
   // fold-at-batch-0 (round-16 verdict item 2): after every k-th batch
   // commits its delta, the fold writes the prior fold ∪ the delta
   // tail (byte-equivalent to base ∪ all deltas so far, bounded at
-  // O(fold + k) inputs) to an immutable `fold=<id>` segment, and each
+  // O(fold + k) inputs) to an immutable per-fold segment, and each
   // batch dedups against the latest COMMITTED fold below it (derived
   // from the fold listing, so k can be retuned across a resume) ∪ the
   // non-folded delta tail — one
@@ -3381,7 +3333,7 @@ object DocQueries {
   // read-side signature, now on the streaming path), the tail union
   // exactly once per later pre-fold batch. The registry entry runs
   // k = 1 over the two-file replay: batch 0 reads the base, folds;
-  // batch 1 reads fold=0 ALONE (StreamIndexDedupSpec pins it on the
+  // batch 1 reads fold 0 ALONE (StreamIndexDedupSpec pins it on the
   // RECORDED per-batch inner plan, including after a checkpoint
   // restart across the compaction boundary); the k = 2 cadence over a
   // four-batch delivery — pre-fold tail read, post-fold clean read,
@@ -3402,363 +3354,74 @@ object DocQueries {
   // delta segments instead of base + ALL segments, and k trades fold
   // write volume against read fan-in exactly like an LSM level policy.
   // Old folds are GC'd past the live fold point (here: Scratch).
-  /** One relation of an LSM-compacted index under the compact-every-k
-    * cadence: the immutable base, the write-once `batch=<id>` delta
-    * segments under deltaDir, and the immutable `fold=<id>` segments
-    * under foldDir. ONE definition of the cadence machinery (fold
-    * point, read state, fold write) for both compaction families —
-    * q110f's two-relation minhash index and q117e's gram index — so a
-    * cadence fix cannot land in one and miss the other. */
-  private[graft] final case class LsmRelation(base: DataFrame,
-      deltaDir: String, cols: Seq[String], foldDir: String)
-
-  /** The fold a batch reads: the LATEST COMMITTED `fold=<n>` segment
-    * on disk with n STRICTLY BELOW the batch id (-1 = none: read the
-    * base). Committed means the writer's `_SUCCESS` marker exists in
-    * EVERY relation's fold dir (the Tables.scala idempotence
-    * contract) — mere directory existence is not enough, because a
-    * crash between a fold's per-relation writes (or mid-write) leaves
-    * a torn fold that the crashed batch is NOT guaranteed to rewrite:
-    * if k was retuned across the restart, the re-run may not fire a
-    * fold at all, and the torn dir would otherwise wedge or silently
-    * truncate every later read. Derived from the listing, not from
-    * (id, k) arithmetic (review finding): under a fixed cadence the
-    * two agree — folds fire after batches k-1, 2k-1, …, so the latest
-    * committed fold below id is k·⌊id/k⌋-1 — but the listing also
-    * survives RETUNING k across a checkpoint resume (arithmetic would
-    * derive a fold that never fired and crash the read). The n < id
-    * bound is the `batch < id` self-exclusion contract at fold
-    * granularity: a redelivered batch never sees its own (possibly
-    * torn) fold, and folds of LATER batches cannot exist when a batch
-    * first runs, so every re-run reads exactly what the first
-    * delivery read. A deployment's GC must use the same committed
-    * predicate AND retain a fold's inputs until its writer batch
-    * checkpoints (a re-run fold overwrite passes through an
-    * uncommitted window). */
-  /** FileSystem + Path for an LSM dir, resolved through the active
-    * session's Hadoop conf (round-17 verdict item 4: the fold/delta
-    * listing previously went through `java.io.File`, binding the LSM
-    * family's deployment story to the local FS — on a cluster these
-    * dirs live on HDFS/S3A and the directory protocol must run
-    * through the same `FileSystem` API the parquet writes use). */
-  private def lsmFs(dir: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    // getActiveSession is thread-local — a maintenance thread calling
-    // lsmGc/foldPoint would miss the session's fs.* credentials/
-    // defaultFS through it, so fall back to the process-wide default
-    // session before a bare Configuration (review finding)
-    val conf = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    (p.getFileSystem(conf), p)
-  }
-
-  /** The `_SUCCESS`-committed segment ids under `dir` whose dirname
-    * starts with `prefix` ("fold=" / "batch=") — ONE definition of the
-    * committed predicate for the fold point, the fold-write skip and
-    * the GC, so the three can never disagree on what "committed"
-    * means. */
-  private def committedIds(dir: String, prefix: String): Set[Long] = {
-    val (fs, p) = lsmFs(dir)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(prefix) &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.drop(prefix.length).toLong)
-          .toOption)
-      .toSet
-  }
-
-  private[graft] def foldPoint(dirs: Seq[String], id: Long): Long =
-    dirs.map(committedIds(_, "fold=")).reduce(_ intersect _)
-      .filter(_ < id).foldLeft(-1L)(math.max)
-
-  /** True iff `dir` holds any `batch=<n>` partition dir with
-    * lo < n < hi — the LISTING form of the delta-tail-emptiness
-    * question every per-batch read asks (round 21, guide §2.4: remove
-    * provably-empty scans outright). DIRECTORY existence — not the
-    * `_SUCCESS` commit marker — is deliberately the predicate: it is
-    * exactly the set a parquet partition-discovery read of the root
-    * would enumerate, so skipping the scan+union when this is false
-    * cannot change what any read returns. This is also what retires
-    * the `batch=-1` schema seed: the only reason the runners wrote an
-    * empty seed segment was so the batch-0 empty-tail read had a
-    * schema to infer — a read that is now elided instead of paid
-    * (2-3 seed-write jobs per streaming run, one empty scan per
-    * batch-0 relation). A spec-seeded `batch=-1` still behaves as
-    * before: it satisfies n < hi bounds with lo = MinValue and the
-    * parquet read then sees its 0 rows, while lsmStateAsOf's
-    * lo = f ≥ -1 excludes it exactly like its `batch > f` filter. */
-  private def hasBatchIn(dir: String, lo: Long, hi: Long): Boolean = {
-    val (fs, p) = lsmFs(dir)
-    fs.exists(p) && fs.listStatus(p).iterator.exists { st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch=") &&
-        scala.util.Try(st.getPath.getName.drop("batch=".length).toLong)
-          .toOption.exists(n => n > lo && n < hi)
-    }
-  }
-
-  /** Highest micro-batch id the stream's CHECKPOINT has committed —
-    * lsmGc's `checkpointedId` input, read from the checkpoint's
-    * commit log (`<ckpt>/commits/<batchId>`, one file per committed
-    * batch; long-lived streams also hold `<n>.compact` rollups whose
-    * id is the suffix-stripped name). −1 = nothing committed yet, so
-    * a GC driven by it is a no-op. Goes through the same FileSystem
-    * resolution as every other LSM directory read. */
-  private[graft] def checkpointedBatchId(ckpt: String): Long = {
-    val (fs, p) = lsmFs(s"$ckpt/commits")
-    if (!fs.exists(p)) -1L
-    else fs.listStatus(p).iterator
-      .flatMap(st => scala.util.Try(
-        st.getPath.getName.stripSuffix(".compact").toLong).toOption)
-      .foldLeft(-1L)(math.max)
-  }
-
-  /** Index state as of just before `hi`, per relation: fold=f ∪ the
-    * delta tail in (f, hi) — f = -1 means the base relation. ONE
-    * definition for the batch read (hi = id) and the fold input
-    * (hi = id + 1), so the two views of "the index so far" cannot
-    * drift. At a fresh post-fold batch (hi = f + 1) the tail is empty
-    * and the state is the fold scan ALONE — the read-side signature
-    * the plan pins read. */
-  private def lsmStateAsOf(s: SparkSession, rels: Seq[LsmRelation],
-      f: Long, hi: Long): Seq[DataFrame] = rels.map { r =>
-    def tail: DataFrame = s.read.parquet(r.deltaDir)
-      .filter(col("batch") > f && col("batch") < hi)
-      .select(r.cols.map(col): _*)
-    // EMPTY-TAIL ELISION (round 21, guide §2.4): when the listing
-    // proves no delta segment falls in (f, hi) — batch 0, or any
-    // fresh post-fold batch — skip the tail scan AND the union
-    // outright instead of scanning an empty relation. The old
-    // hi == f + 1 special case is subsumed (no n fits in (f, f+1)).
-    val hasTail = hasBatchIn(r.deltaDir, f, hi)
-    if (f < 0L) {
-      val base = r.base.select(r.cols.map(col): _*)
-      if (hasTail) base.union(tail) else base
-    }
-    else if (!hasTail) s.read.parquet(s"${r.foldDir}/fold=$f")
-    else s.read.parquet(s"${r.foldDir}/fold=$f").union(tail)
-  }
-
-  /** Write the fold at batch `id`: prior fold ∪ the delta tail
-    * THROUGH this batch (byte-equivalent to base ∪ all deltas so far,
-    * bounded at O(fold + k) inputs) to the immutable per-fold
-    * location `fold=<id>` of every relation. `midFold` fires between
-    * per-relation writes — the torn-fold crash-injection point.
-    *
-    * A relation whose fold=<id> is already COMMITTED is skipped
-    * (round-17 ADVICE item 4): a redelivered fold's content is
-    * byte-identical by construction — its inputs are the immutable
-    * prior fold + write-once deltas and foldPoint resolves the same f
-    * on redelivery (`n < id` excludes the batch's own fold; later
-    * folds cannot exist for an uncheckpointed batch) — so rewriting
-    * it through mode("overwrite") only passed a committed fold
-    * through a transient uncommitted window (the _SUCCESS delete) for
-    * nothing. Skipping closes that window entirely; a TORN fold (no
-    * _SUCCESS) still takes the overwrite path and completes. */
-  /** Run independent Spark write thunks CONCURRENTLY, one thread per
-    * thunk, propagating the first failure. Spark's scheduler is built
-    * for multi-threaded job submission (FIFO across the 32 local
-    * cores); the LSM family's per-batch cost at bench scale is
-    * FIXED per-job overhead, not data (q122 reads ~16 s at sf0.001
-    * AND sf0.1), so running the independent writes of one batch as
-    * one wave instead of a sequence is pure wall-clock back — the
-    * round-18 WATCH item's fix, without changing any on-disk layout
-    * or commit point. Single-thunk calls stay inline (no thread). */
-  private def parWrite(thunks: Seq[() => Unit]): Unit =
-    if (thunks.sizeIs <= 1) thunks.foreach(_())
-    else {
-      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val ts = thunks.map(t => new Thread(() =>
-        try t() catch { case e: Throwable => errs.add(e) }))
-      ts.foreach(_.start()); ts.foreach(_.join())
-      if (!errs.isEmpty) {
-        // surface ONE failure, but keep every other thread's as
-        // suppressed — a wave where both families fail must not lose
-        // the more informative diagnostic (review finding)
-        val first = errs.poll()
-        var e = errs.poll()
-        while (e != null) { first.addSuppressed(e); e = errs.poll() }
-        throw first
-      }
-    }
-
-  private def lsmFoldAt(s: SparkSession, rels: Seq[LsmRelation],
-      f: Long, id: Long, midFold: () => Unit = () => ()): Unit = {
-    // decide the skip set FIRST: building lsmStateAsOf eagerly lists +
-    // schema-infers every relation's fold/delta locations, which is
-    // pure waste for relations about to be skipped (review finding —
-    // several LIST/HEAD round-trips per redelivered fold on S3/HDFS).
-    val pending = rels.filterNot(r =>
-      committedIds(r.foldDir, "fold=").contains(id))
-    // STAGE + RENAME (round-18 verdict item 6, the r17 ADVICE item 4
-    // residual): a direct mode("overwrite") of a genuinely TORN fold
-    // deleted the remains and then spent the whole parquet job inside
-    // a half-written final location — a second crash left a
-    // differently-torn dir. Staging to a dot-prefixed sibling (hidden
-    // from parquet listings, committedIds and GC's fold= prefix
-    // match) and renaming into place shrinks the commit to one
-    // directory rename: the final location is only ever absent, the
-    // old torn remains, or complete-with-_SUCCESS — never mid-write.
-    // Committed folds are skipped above, so no _SUCCESS-bearing
-    // segment is ever deleted (law-pinned). Staging also splits the
-    // fold into an expensive parallel phase and a cheap commit phase:
-    // the parquet jobs run as ONE concurrent wave (they are
-    // independent — immutable prior fold + write-once deltas in, a
-    // private staging dir out), then the renames COMMIT sequentially
-    // with midFold between them, so the observable crash states are
-    // exactly the sequential ones (relations 0..i-1 committed, the
-    // rest absent-from-final) at a third of the wall.
-    val staged = pending.zip(lsmStateAsOf(s, pending, f, id + 1))
-      .map { case (r, st) =>
-        val (fs, _) = lsmFs(r.foldDir)
-        val finalP = new org.apache.hadoop.fs.Path(s"${r.foldDir}/fold=$id")
-        val stageP = new org.apache.hadoop.fs.Path(
-          s"${r.foldDir}/.fold=$id.staging")
-        (fs, finalP, stageP,
-          () => st.write.mode("overwrite").parquet(stageP.toString))
-      }
-    parWrite(staged.map(_._4))
-    staged.zipWithIndex.foreach { case ((fs, finalP, stageP, _), i) =>
-      if (i > 0) midFold()
-      if (fs.exists(finalP)) fs.delete(finalP, true) // torn remains
-      if (!fs.rename(stageP, finalP))
-        throw new java.io.IOException(
-          s"fold commit rename failed: $stageP -> $finalP")
-    }
-  }
-
-  /** LSM GC exemplar (round-17 verdict item 3 — the contract the
-    * foldPoint docstring specifies, as code): delete the fold/delta
-    * segments that can never be read again, and ONLY those. The live
-    * fold point is the latest fold that is both COMMITTED (the same
-    * `_SUCCESS`-in-every-relation predicate foldPoint reads) and
-    * CHECKPOINTED (writer batch ≤ `checkpointedId`, the highest batch
-    * the stream's checkpoint has committed — the caller reads it from
-    * the checkpoint's commit log). Below that point everything is
-    * dead: earlier folds are superseded, and deltas at or below it
-    * are folded in. AT or ABOVE it everything must survive —
-    * a committed-but-uncheckpointed fold sits inside the redelivery
-    * window (its writer batch may re-run and must re-read the live
-    * fold + the tail past it), so GC never touches it or its delta
-    * inputs. A `batch=-1` schema seed (no longer written by the
-    * runners — empty tails are elided by listing — but legal on
-    * disk, e.g. spec-seeded) also stays: deadSegs bounds at n >= 0.
-    * Returns the live fold
-    * point (-1 = nothing GC-able yet). Idempotent and crash-safe:
-    * every delete targets a segment no current or future read can
-    * reference, so a GC torn mid-way just leaves some dead segments
-    * for the next GC. */
-  private[graft] def lsmGc(rels: Seq[LsmRelation],
-      checkpointedId: Long): Long = {
-    val f = foldPoint(rels.map(_.foldDir), checkpointedId + 1)
-    // delete by RAW listing, not the committed set: a TORN fold below
-    // the live point is dead garbage too (its writer batch
-    // checkpointed, so nothing will ever complete it, and the commit
-    // predicate already hides it from every read) — leaving it would
-    // accumulate junk dirs forever. Above the live point commit state
-    // doesn't matter either: everything survives.
-    def deadSegs(dir: String, prefix: String, upTo: Long,
-        suffix: String = ""): Seq[org.apache.hadoop.fs.Path] = {
-      val (fs, p) = lsmFs(dir)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).iterator
-        .filter { st =>
-          val n = st.getPath.getName
-          n.startsWith(prefix) && n.endsWith(suffix) &&
-            scala.util.Try(n.drop(prefix.length)
-              .dropRight(suffix.length).toLong).toOption
-              .exists(v => v >= 0 && v <= upTo)
-        }
-        .map(st => st.getPath).toSeq
-    }
-    if (f >= 0) rels.foreach { r =>
-      val (foldFs, _) = lsmFs(r.foldDir)
-      deadSegs(r.foldDir, "fold=", f - 1)
-        .foreach(foldFs.delete(_, true))
-      // dead fold STAGING leftovers (a crash between lsmFoldAt's stage
-      // write and its rename): at id < f the fold is superseded; at
-      // id = f the live fold committed, so the staged copy will never
-      // be renamed. Above f the owning batch may still redeliver —
-      // its rewrite owns (and overwrites) that staging dir, not GC.
-      deadSegs(r.foldDir, ".fold=", f, ".staging")
-        .foreach(foldFs.delete(_, true))
-      val (dFs, _) = lsmFs(r.deltaDir)
-      deadSegs(r.deltaDir, "batch=", f).foreach(dFs.delete(_, true))
-    }
-    f
-  }
-
-  /** One micro-batch under the COMPACT-EVERY-K cadence policy
-    * (round-16 verdict item 2 — the hard-coded compact-at-batch-0
-    * generalized): batch id dedups against fold=f ∪ the delta segments
-    * of batches in (f, id), where f = foldPoint(rels.map(_.foldDir),
-    * id) — the latest
-    * committed fold below id — and f = -1 means the base relations
-    * (pre-fold batches read base ∪ deltas in [0, id), q110d's shape);
-    * after the batch's own delta lands, a fold fires iff
-    * (id+1) % k == 0, writing the prior fold ∪ the delta tail through
-    * this batch (byte-equivalent to base ∪ all deltas so far, bounded
-    * at O(fold + k) inputs) to the IMMUTABLE per-fold location
-    * `fold=<id>`. Per-fold locations (not one overwritten dir) are
-    * what keep redelivery exact: a re-run batch reads the fold its
-    * first delivery read — never a fold its own torn first delivery
-    * wrote — the `batch < id` self-exclusion contract at fold
-    * granularity; and the fold's inputs are only the immutable prior
-    * fold + write-once deltas, so a redelivered fold rewrites
-    * byte-identical content. Everything stays a pure function of
-    * (batchId, disk state at batch start), which redelivery preserves.
-    * A deployment GCs superseded folds AND the deltas at or below the
-    * live fold point (both are dead); the fixtures let Scratch purge
-    * them. */
+  /** One q110 streaming ingest-dedup micro-batch — a pure function of
+    * (batchId, disk state at batch start), shared by q110d (no
+    * `compactDirs`: the index never folds) and q110f (the COMPACT-EVERY-K
+    * cadence over the `compactDirs` bands/sets fold dirs). Batch id
+    * dedups against fold f ∪ the delta segments of batches in (f, id),
+    * where f = LsmIndex.foldPoint — the latest committed fold below id
+    * — and f = -1 means the base relations (q110d's every batch, and
+    * q110f's pre-fold batches, read base ∪ deltas in [0, id)); it then
+    * appends its kept bands/sets as its own delta segment. When
+    * folding, a fold fires after the delta lands iff (id+1) % k == 0,
+    * writing the prior fold ∪ the delta tail through this batch
+    * (byte-equivalent to base ∪ all deltas so far, bounded at
+    * O(fold + k) inputs) to an IMMUTABLE per-fold location. Per-fold
+    * locations (not one overwritten dir) are what keep redelivery
+    * exact: a re-run batch reads the fold its first delivery read —
+    * never a fold its own torn first delivery wrote — the `batch < id`
+    * self-exclusion contract at fold granularity; and the fold's
+    * inputs are only the immutable prior fold + write-once deltas, so
+    * a redelivered fold rewrites byte-identical content. Write order:
+    * delta segments, fold, sink; `crashBeforeSink` and `crashMidFold`
+    * are the torn-write injection points. A deployment GCs superseded
+    * folds AND the deltas at or below the live fold point (both are
+    * dead); the fixtures let Scratch purge them. private[graft] for
+    * StreamIndexDedupSpec's redelivery, cadence and torn-write laws. */
   private[graft] def streamCompactBatch(s: SparkSession, micro: DataFrame,
       id: Long, baseBands: DataFrame, baseSets: DataFrame,
       deltaBandsDir: String, deltaSetsDir: String,
-      compactBandsDir: String, compactSetsDir: String, sinkDir: String,
+      compactDirs: Option[(String, String)], sinkDir: String,
       k: Int = 1, crashBeforeSink: Long => Unit = _ => (),
       crashMidFold: Long => Unit = _ => ()): Unit = {
     require(k >= 1, s"compact-every-k cadence needs k >= 1, got $k")
+    // micro feeds three branches (shingles, kept anti-join, funnel):
+    // pin it once so the file slice is read once
     val b = micro.localCheckpoint()
-    val record: DataFrame => Unit =
-      graft.streaming.StreamingJobs.recordInnerPlan(
-        s"q110f_stream_compaction batch=$id", _)
+    val name =
+      if (compactDirs.isEmpty) "q110d_stream_index_dedup"
+      else "q110f_stream_compaction"
     val rels = Seq(
-      LsmRelation(baseBands, deltaBandsDir,
-        Seq("doc_id", "band_idx", "band_val"), compactBandsDir),
-      LsmRelation(baseSets, deltaSetsDir,
-        Seq("doc_id", "ss", "n"), compactSetsDir))
-    // the latest fold COMMITTED in both relations' dirs (the batch=-1
-    // schema seed in the delta tail is excluded by the > f bound)
-    val f = foldPoint(rels.map(_.foldDir), id)
-    val Seq(ib, is) = lsmStateAsOf(s, rels, f, id)
+      LsmIndex.Relation(baseBands, deltaBandsDir,
+        Seq("doc_id", "band_idx", "band_val"), compactDirs.map(_._1)),
+      LsmIndex.Relation(baseSets, deltaSetsDir,
+        Seq("doc_id", "ss", "n"), compactDirs.map(_._2)))
+    // the latest fold COMMITTED in both relations' dirs (a spec-seeded
+    // batch=-1 in the delta tail is excluded by the > f bound)
+    val f = LsmIndex.foldPoint(rels, id)
+    val Seq(ib, is) = LsmIndex.stateAsOf(s, rels, f, id)
     val near = ingestAndAppend(b, ib, is,
-      s"$deltaBandsDir/batch=$id", s"$deltaSetsDir/batch=$id", record)
-    // major compaction at the cadence: fold the prior fold ∪ the delta
-    // tail THROUGH this batch into the immutable fold=<id> segment —
-    // byte-equivalent to base ∪ all deltas so far but bounded at
-    // O(fold + k) input segments (review finding: re-reading base +
-    // every delta since batch 0 grew with stream lifetime and kept
-    // folded deltas forever-live; now deltas at or below f are DEAD
-    // and a deployment GCs them with the superseded folds). One
-    // linear union per relation, no shuffle; inputs are the immutable
-    // prior fold + write-once deltas, so a redelivered fold rewrites
-    // the same relation.
-    if ((id + 1) % k == 0)
-      lsmFoldAt(s, rels, f, id, () => crashMidFold(id))
+      LsmIndex.deltaSegment(deltaBandsDir, id),
+      LsmIndex.deltaSegment(deltaSetsDir, id),
+      StreamingJobs.recordInnerPlan(s"$name batch=$id", _))
+    // major compaction at the cadence: one linear union per relation,
+    // no shuffle; deltas at or below f are DEAD once folded and a
+    // deployment GCs them with the superseded folds
+    LsmIndex.foldIfDue(s, rels, f, id, k, () => crashMidFold(id))
+    // TORN-WRITE injection point (StreamIndexDedupSpec's crash law):
+    // the worst at-least-once case is a kill AFTER the segment write
+    // but BEFORE the sink write — the batch's delta exists, its commit
+    // doesn't, and the rerun must overwrite both to the one-shot bytes
     crashBeforeSink(id)
     dedupFunnel(b, near).coalesce(1)
       .write.mode("overwrite").parquet(s"$sinkDir/batch=$id")
   }
 
   /** Run the streaming compaction replay: drain the two-file replay
-    * through streamCompactBatch with AvailableNow under the
-    * compact-every-k cadence (no schema seeds — the empty tail is
-    * elided by listing). private[graft] for StreamIndexDedupSpec's
-    * restart-across-the-fold and torn-write laws. */
+    * through streamCompactBatch under the compact-every-k cadence (no
+    * schema seeds — the empty tail is elided by listing).
+    * private[graft] for StreamIndexDedupSpec's restart-across-the-fold
+    * and torn-write laws. */
   private[graft] def runStreamCompactDedup(s: SparkSession, dir: String,
       replayDir: String, deltaBandsDir: String, deltaSetsDir: String,
       compactBandsDir: String, compactSetsDir: String, sinkDir: String,
@@ -3766,27 +3429,18 @@ object DocQueries {
       crashBeforeSink: Long => Unit = _ => (),
       crashMidFold: Long => Unit = _ => ()): Unit = {
     val (iBands, iSets) = Tables.minhashIndexBase(s, dir)
-    val q = graft.streaming.StreamingJobs.readDocsStream(s, replayDir)
-      .writeStream
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         id: Long) =>
-          streamCompactBatch(s, df, id, iBands, iSets,
-            deltaBandsDir, deltaSetsDir, compactBandsDir, compactSetsDir,
-            sinkDir, k, crashBeforeSink, crashMidFold)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamingJobs.capturePlan(
-      "q110f_stream_compaction", q)
+    StreamingJobs.drainDocs(s, replayDir, ckpt,
+      "q110f_stream_compaction") { (df, id) =>
+      streamCompactBatch(s, df, id, iBands, iSets, deltaBandsDir,
+        deltaSetsDir, Some((compactBandsDir, compactSetsDir)), sinkDir, k,
+        crashBeforeSink, crashMidFold)
+    }
   }
 
   private val q110f = QueryDef(
     "q110f_stream_compaction",
     (s, dir) => {
-      val replay = graft.streaming.StreamingJobs.docsReplayDir(s, dir)
+      val replay = StreamingJobs.docsReplayDir(s, dir)
       def tmp(tag: String): String = Scratch.dir(s"graft-q110f-$tag")
       val (dBands, dSets, cBands, cSets, sink, ckpt) =
         (tmp("dbands"), tmp("dsets"), tmp("cbands"), tmp("csets"),
@@ -4263,7 +3917,7 @@ object DocQueries {
   // STREAMING INGEST DRIFT — q116's monitor run the way production runs
   // it: per MICRO-BATCH, as each ingest batch arrives, instead of once
   // over a pre-carved static batch. The q110d replay (mod-0 then mod-1
-  // as two AvailableNow micro-batches) drains through a foreachBatch
+  // as two AvailableNow micro-batches) drains through a per-batch function
   // that writes each batch's per-source counts to its own idempotent
   // `batch=<id>` sink partition (the q79 change-log contract — a
   // redelivered batch overwrites itself); the monitor report is then a
@@ -4318,26 +3972,18 @@ object DocQueries {
     "q116b_stream_drift",
     (s, dir) => {
       import s.implicits._
-      val replay = graft.streaming.StreamingJobs.docsReplayDir(s, dir)
+      val replay = StreamingJobs.docsReplayDir(s, dir)
       def tmp(tag: String): String = Scratch.dir(s"graft-q116b-$tag")
       val (sink, ckpt) = (tmp("sink"), tmp("ckpt"))
-      val q = graft.streaming.StreamingJobs.readDocsStream(s, replay)
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           id: Long) =>
-            val counts = df.groupBy(col("source"))
-              .agg(count(lit(1)).as("batch_docs"))
-            graft.streaming.StreamingJobs.recordInnerPlan(
-              s"q116b_stream_drift batch=$id", counts)
-            counts.coalesce(1)
-              .write.mode("overwrite").parquet(s"$sink/batch=$id")
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingJobs.capturePlan("q116b_stream_drift", q)
+      StreamingJobs.drainDocs(s, replay, ckpt, "q116b_stream_drift") {
+        (df, id) =>
+          val counts = df.groupBy(col("source"))
+            .agg(count(lit(1)).as("batch_docs"))
+          StreamingJobs.recordInnerPlan(s"q116b_stream_drift batch=$id",
+            counts)
+          counts.coalesce(1)
+            .write.mode("overwrite").parquet(s"$sink/batch=$id")
+      }
       // read time: the standing corpus mixture + exact integer ppm
       // (the shared withDriftColumns arithmetic)
       withDriftColumns(s, dir, s.read.parquet(sink)
@@ -4459,7 +4105,7 @@ object DocQueries {
   // ingest (`Tables.gramIndex` — the artifact q117's scale note
   // promises), and each arriving micro-batch's bounded gram set
   // broadcasts against ONE pruned index scan inside a stateless
-  // foreachBatch; per-batch per-source counts land in idempotent
+  // per-batch function; per-source counts land in idempotent
   // `batch=<id>` sink partitions (the q79 contract) and the report is
   // a pure sink read. Novelty here is measured against the STANDING
   // corpus (stateless monitor, like q116b) — the cumulative
@@ -4549,29 +4195,21 @@ object DocQueries {
     "q117b_stream_novelty",
     (s, dir) => {
       import s.implicits._
-      val replay = graft.streaming.StreamingJobs.docsReplayDir(s, dir)
+      val replay = StreamingJobs.docsReplayDir(s, dir)
       val grams = Tables.gramIndex(s, dir)
       def tmp(tag: String): String = Scratch.dir(s"graft-q117b-$tag")
       val (sink, ckpt) = (tmp("sink"), tmp("ckpt"))
-      val q = graft.streaming.StreamingJobs.readDocsStream(s, replay)
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           id: Long) =>
-            // bg feeds the probe set and the final left join — pin one
-            // derivation (the q117 pattern; batch-sized blocks)
-            val bg = sourceGrams(df).localCheckpoint()
-            val rep = noveltyBatchReport(bg, grams)
-            graft.streaming.StreamingJobs.recordInnerPlan(
-              s"q117b_stream_novelty batch=$id", rep)
-            rep.coalesce(1)
-              .write.mode("overwrite").parquet(s"$sink/batch=$id")
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingJobs.capturePlan("q117b_stream_novelty", q)
+      StreamingJobs.drainDocs(s, replay, ckpt, "q117b_stream_novelty") {
+        (df, id) =>
+          // bg feeds the probe set and the final left join — pin one
+          // derivation (the q117 pattern; batch-sized blocks)
+          val bg = sourceGrams(df).localCheckpoint()
+          val rep = noveltyBatchReport(bg, grams)
+          StreamingJobs.recordInnerPlan(s"q117b_stream_novelty batch=$id",
+            rep)
+          rep.coalesce(1)
+            .write.mode("overwrite").parquet(s"$sink/batch=$id")
+      }
       s.read.parquet(sink)
         .select(($"batch".cast(LongType) + 1).as("batch"), $"source",
           $"batch_grams", $"novel_grams",
@@ -4704,7 +4342,7 @@ object DocQueries {
   // STREAMING CUMULATIVE GRAM APPEND — q117c's append cycle run as a
   // checkpointed stream, completing the monitor family the way q110d
   // completed the dedup family (q117c : q117d :: q110c : q110d): the
-  // two-file replay drains through a foreachBatch that measures each
+  // two-file replay drains through a per-batch function that measures each
   // arriving batch's novelty against the gram index ∪ the admitted
   // grams of STRICTLY-EARLIER batches (`batch < id` — a redelivered
   // batch ignores its own first-delivery segment, so at-least-once
@@ -4730,57 +4368,20 @@ object DocQueries {
   // monitor holds no streaming state (the cumulative memory lives in
   // the write-once segments, not the state store). Fresh
   // sink/ckpt/delta dirs per run (Scratch-registered).
-  /** One streaming cumulative-novelty micro-batch — pure function of
-    * (batchId, data). private[graft] for GramAppendSpec's redelivery
-    * law. `crashAfterSink` is the torn-write injection point (round-16
-    * verdict item 4): q117d writes sink-BEFORE-segment — the mirror of
-    * q110d's segment-before-sink order — so the worst at-least-once
-    * tear here is a committed sink partition with a MISSING delta
-    * segment, and the rerun must restore both to the one-shot bytes. */
-  private[graft] def streamGramBatch(s: SparkSession, micro: DataFrame,
-      id: Long, grams: DataFrame, deltaDir: String,
-      sinkDir: String, crashAfterSink: Long => Unit = _ => ()): Unit = {
-    val bg = sourceGrams(micro).localCheckpoint()
-    // empty-tail elision, the streamDedupBatch form: batch 0 of a
-    // fresh run probes the base gram index alone
-    val ref =
-      if (!hasBatchIn(deltaDir, Long.MinValue, id)) grams
-      else grams.union(
-        s.read.parquet(deltaDir).filter(col("batch") < id)
-          .select(col("gram")))
-    val hitsPlan = noveltyHits(bg, ref)
-    graft.streaming.StreamingJobs.recordInnerPlan(
-      s"q117d_stream_gram_append batch=$id", hitsPlan)
-    val hits = hitsPlan.localCheckpoint()
-    noveltyReportFromHits(bg, hits).coalesce(1)
-      .write.mode("overwrite").parquet(s"$sinkDir/batch=$id")
-    crashAfterSink(id)
-    novelGrams(bg, hits)
-      .write.mode("overwrite").parquet(s"$deltaDir/batch=$id")
-  }
-
   /** Run the streaming cumulative-novelty replay: drain the two-file
-    * replay with AvailableNow (no schema seed — the empty tail is
-    * elided by listing). private[graft] for GramAppendSpec's resume
-    * law. */
+    * replay through the gram per-batch function with folding off, so
+    * every batch probes the gram index ∪ its strictly-earlier delta
+    * segments (no schema seed — the empty tail is elided by listing).
+    * private[graft] for GramAppendSpec's resume and torn-write laws. */
   private[graft] def runStreamGramAppend(s: SparkSession, dir: String,
       replayDir: String, deltaDir: String, sinkDir: String,
       ckpt: String, crashAfterSink: Long => Unit = _ => ()): Unit = {
     val grams = Tables.gramIndex(s, dir)
-    val q = graft.streaming.StreamingJobs.readDocsStream(s, replayDir)
-      .writeStream
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         id: Long) =>
-          streamGramBatch(s, df, id, grams, deltaDir, sinkDir,
-            crashAfterSink)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamingJobs.capturePlan(
-      "q117d_stream_gram_append", q)
+    StreamingJobs.drainDocs(s, replayDir, ckpt,
+      "q117d_stream_gram_append") { (df, id) =>
+      streamGramCompactBatch(s, df, id, grams, deltaDir, None, sinkDir,
+        crashAfterSink = crashAfterSink)
+    }
   }
 
   /** Resolve the q117d sink change-log to the q117c report shape. */
@@ -4795,7 +4396,7 @@ object DocQueries {
   private val q117d = QueryDef(
     "q117d_stream_gram_append",
     (s, dir) => {
-      val replay = graft.streaming.StreamingJobs.docsReplayDir(s, dir)
+      val replay = StreamingJobs.docsReplayDir(s, dir)
       def tmp(tag: String): String = Scratch.dir(s"graft-q117d-$tag")
       val (delta, sink, ckpt) = (tmp("delta"), tmp("sink"), tmp("ckpt"))
       runStreamGramAppend(s, dir, replay, delta, sink, ckpt)
@@ -4809,11 +4410,11 @@ object DocQueries {
   // q117d's cumulative append leaves the gram index as base + one
   // delta segment per batch, so a long-lived stream's probe unions an
   // ever-growing segment tail; here the q110f compact-every-k cadence
-  // folds base ∪ all gram deltas so far into an immutable `fold=<id>`
+  // folds base ∪ all gram deltas so far into an immutable per-fold
   // segment after every k-th batch, and each batch probes the latest
   // fold at or before it ∪ the non-folded delta tail. The registry
   // entry runs k = 1 over the two-file replay: batch 0 probes the base
-  // gram index, appends its novel grams, folds; batch 1 probes fold=0
+  // gram index, appends its novel grams, folds; batch 1 probes fold 0
   // ALONE — one pruned scan, no base, no delta (GramAppendSpec pins it
   // on the RECORDED probe plan). Same purity contract as q110f: folds
   // read only the immutable base + write-once deltas and land at
@@ -4831,65 +4432,64 @@ object DocQueries {
   // instead of base + ALL segments — the same LSM read/write trade as
   // q110f, at the granularity where the segment tail grows fastest
   // (every batch appends grams; only admitted docs append bands).
-  /** One gram micro-batch under the compact-every-k cadence — pure
-    * function of (batchId, data); sink-before-segment-before-fold
-    * write order (the q117d family order, `crashAfterSink` mirrors its
-    * torn-write injection point). private[graft] for GramAppendSpec. */
+  /** One gram micro-batch — a pure function of (batchId, disk state at
+    * batch start), shared by q117d (no `foldDir`: the gram index never
+    * folds) and q117e (the compact-every-k cadence over `foldDir`). The
+    * probe reads the gram LSM state — the latest committed fold below
+    * id ∪ the delta tail past it, or base ∪ deltas in [0, id) — through
+    * the same LsmIndex machinery as streamCompactBatch. Write order:
+    * sink, then the batch's novel-gram delta segment, then the fold at
+    * the cadence — the mirror of q110's segment-before-sink order, so
+    * the worst at-least-once tear here is a committed sink partition
+    * with a MISSING delta segment (`crashAfterSink` is that injection
+    * point), and the rerun must restore both to the one-shot bytes.
+    * private[graft] for GramAppendSpec. */
   private[graft] def streamGramCompactBatch(s: SparkSession,
       micro: DataFrame, id: Long, grams: DataFrame, deltaDir: String,
-      foldDir: String, sinkDir: String, k: Int = 1,
+      foldDir: Option[String], sinkDir: String, k: Int = 1,
       crashAfterSink: Long => Unit = _ => ()): Unit = {
     require(k >= 1, s"compact-every-k cadence needs k >= 1, got $k")
     val bg = sourceGrams(micro).localCheckpoint()
-    // the shared LSM cadence machinery (foldPoint/lsmStateAsOf/
-    // lsmFoldAt — the streamCompactBatch contract at gram granularity)
-    val rels = Seq(LsmRelation(grams, deltaDir, Seq("gram"), foldDir))
-    val f = foldPoint(rels.map(_.foldDir), id)
-    val Seq(gramState) = lsmStateAsOf(s, rels, f, id)
+    val name =
+      if (foldDir.isEmpty) "q117d_stream_gram_append"
+      else "q117e_stream_gram_compaction"
+    val rels = Seq(LsmIndex.Relation(grams, deltaDir, Seq("gram"), foldDir))
+    val f = LsmIndex.foldPoint(rels, id)
+    val Seq(gramState) = LsmIndex.stateAsOf(s, rels, f, id)
     val hitsPlan = noveltyHits(bg, gramState)
-    graft.streaming.StreamingJobs.recordInnerPlan(
-      s"q117e_stream_gram_compaction batch=$id", hitsPlan)
+    StreamingJobs.recordInnerPlan(s"$name batch=$id", hitsPlan)
     val hits = hitsPlan.localCheckpoint()
     noveltyReportFromHits(bg, hits).coalesce(1)
       .write.mode("overwrite").parquet(s"$sinkDir/batch=$id")
     crashAfterSink(id)
     novelGrams(bg, hits)
-      .write.mode("overwrite").parquet(s"$deltaDir/batch=$id")
+      .write.mode("overwrite").parquet(LsmIndex.deltaSegment(deltaDir, id))
     // fold the prior fold ∪ the tail THROUGH this batch — bounded at
     // O(fold + k) inputs, byte-equivalent to base ∪ all deltas so far
     // (the streamCompactBatch fold contract; deltas at or below f are
     // dead once superseded)
-    if ((id + 1) % k == 0) lsmFoldAt(s, rels, f, id)
+    LsmIndex.foldIfDue(s, rels, f, id, k)
   }
 
-  /** Run the streaming gram-compaction replay (drain, AvailableNow —
-    * the runStreamGramAppend contract plus the fold dir; no schema
-    * seed). private[graft] for GramAppendSpec. */
+  /** Run the streaming gram-compaction replay (the runStreamGramAppend
+    * drain plus the fold dir; no schema seed). private[graft] for
+    * GramAppendSpec. */
   private[graft] def runStreamGramCompact(s: SparkSession, dir: String,
       replayDir: String, deltaDir: String, foldDir: String,
       sinkDir: String, ckpt: String, k: Int = 1,
       crashAfterSink: Long => Unit = _ => ()): Unit = {
     val grams = Tables.gramIndex(s, dir)
-    val q = graft.streaming.StreamingJobs.readDocsStream(s, replayDir)
-      .writeStream
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         id: Long) =>
-          streamGramCompactBatch(s, df, id, grams, deltaDir, foldDir,
-            sinkDir, k, crashAfterSink)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamingJobs.capturePlan(
-      "q117e_stream_gram_compaction", q)
+    StreamingJobs.drainDocs(s, replayDir, ckpt,
+      "q117e_stream_gram_compaction") { (df, id) =>
+      streamGramCompactBatch(s, df, id, grams, deltaDir, Some(foldDir),
+        sinkDir, k, crashAfterSink)
+    }
   }
 
   private val q117e = QueryDef(
     "q117e_stream_gram_compaction",
     (s, dir) => {
-      val replay = graft.streaming.StreamingJobs.docsReplayDir(s, dir)
+      val replay = StreamingJobs.docsReplayDir(s, dir)
       def tmp(tag: String): String = Scratch.dir(s"graft-q117e-$tag")
       val (delta, fold, sink, ckpt) =
         (tmp("delta"), tmp("fold"), tmp("sink"), tmp("ckpt"))
@@ -4900,7 +4500,7 @@ object DocQueries {
 
   // --------------------------------------------------------------- Q122
   // STREAMING INGEST CAPSTONE — the job a production curation pipeline
-  // actually deploys (round-16 verdict item 1): ONE foreachBatch that,
+  // actually deploys (round-16 verdict item 1): ONE per-batch function that,
   // per arriving micro-batch and from ONE replay drain, (a) dedups the
   // batch against the standing MinHash index and appends the kept
   // docs' bands/sets as the batch's delta segment (q110d's step),
@@ -4943,15 +4543,29 @@ object DocQueries {
   // two minhash relations AND the gram relation — so a long-lived
   // deployment of this one job reads O(fold + k) segments per batch
   // instead of base + every delta ever appended (the last unbounded
-  // tail in the family); superseded folds/deltas are lsmGc's food,
+  // tail in the family); superseded folds/deltas are LsmIndex.gc's food,
   // and since round 19 the GC actually EATS them in this entry's own
-  // path: runStreamCapstone calls lsmGc(capstoneRels,
+  // path: runStreamCapstone calls LsmIndex.gc(capstoneRels,
   // checkpointedBatchId(ckpt)) after the drain — the post-checkpoint
   // maintenance point a deployment would use.
   // The registry entry runs k = 1 over the two-file replay: batch 1
-  // reads fold=0 ALONE in both the dedup join and the gram probe
+  // reads fold 0 ALONE in both the dedup join and the gram probe
   // (StreamCapstoneSpec pins the recorded inner plans), and the
   // oracle is UNCHANGED — fold read-equivalence, the q110f pattern.
+  /** The capstone's three LSM relations, in ONE place so the per-batch
+    * function and the post-checkpoint GC can never disagree on what
+    * the index family is. */
+  private def capstoneRels(baseBands: DataFrame, baseSets: DataFrame,
+      deltaBandsDir: String, deltaSetsDir: String,
+      foldBandsDir: String, foldSetsDir: String,
+      grams: DataFrame, gramDeltaDir: String, gramFoldDir: String)
+      : Seq[LsmIndex.Relation] = Seq(
+    LsmIndex.Relation(baseBands, deltaBandsDir,
+      Seq("doc_id", "band_idx", "band_val"), foldBandsDir),
+    LsmIndex.Relation(baseSets, deltaSetsDir,
+      Seq("doc_id", "ss", "n"), foldSetsDir),
+    LsmIndex.Relation(grams, gramDeltaDir, Seq("gram"), gramFoldDir))
+
   /** One capstone micro-batch — a pure function of (batchId, disk
     * state at batch start): dedup vs the minhash LSM state (latest
     * committed fold ∪ the strictly-earlier delta tail past it; -1 =
@@ -4962,26 +4576,12 @@ object DocQueries {
     * directly, so the ONE job a production pipeline actually deploys
     * paid base + every delta ever appended — unbounded over a stream's
     * lifetime while the cadence machinery sat standalone in q110f/
-    * q117e. Now the shared LsmRelation/foldPoint/lsmStateAsOf/
-    * lsmFoldAt machinery bounds every read at O(fold + k) segments,
+    * q117e. Now the shared LsmIndex machinery bounds every read at
+    * O(fold + k) segments,
     * and ONE fold point governs both index families (committed =
     * `_SUCCESS` in all three fold dirs), so the dedup and novelty
     * monitors can never disagree about which fold a batch reads.
     * private[graft] for StreamCapstoneSpec's redelivery law. */
-  /** The capstone's three LSM relations, in ONE place so the per-batch
-    * function and the post-checkpoint GC can never disagree on what
-    * the index family is. */
-  private def capstoneRels(baseBands: DataFrame, baseSets: DataFrame,
-      deltaBandsDir: String, deltaSetsDir: String,
-      foldBandsDir: String, foldSetsDir: String,
-      grams: DataFrame, gramDeltaDir: String, gramFoldDir: String)
-      : Seq[LsmRelation] = Seq(
-    LsmRelation(baseBands, deltaBandsDir,
-      Seq("doc_id", "band_idx", "band_val"), foldBandsDir),
-    LsmRelation(baseSets, deltaSetsDir,
-      Seq("doc_id", "ss", "n"), foldSetsDir),
-    LsmRelation(grams, gramDeltaDir, Seq("gram"), gramFoldDir))
-
   private[graft] def streamCapstoneBatch(s: SparkSession, micro: DataFrame,
       id: Long, baseBands: DataFrame, baseSets: DataFrame,
       deltaBandsDir: String, deltaSetsDir: String,
@@ -5002,8 +4602,8 @@ object DocQueries {
     val rels = capstoneRels(baseBands, baseSets, deltaBandsDir,
       deltaSetsDir, foldBandsDir, foldSetsDir, grams, gramDeltaDir,
       gramFoldDir)
-    val f = foldPoint(rels.map(_.foldDir), id)
-    val Seq(ib, is, gramRef) = lsmStateAsOf(s, rels, f, id)
+    val f = LsmIndex.foldPoint(rels, id)
+    val Seq(ib, is, gramRef) = LsmIndex.stateAsOf(s, rels, f, id)
     // ---- (a) ∥ (b): the two monitor families are INDEPENDENT — (a)
     // reads the batch + the minhash LSM state and writes the two
     // minhash deltas, (b) reads the shared shingle pass + the gram
@@ -5021,11 +4621,12 @@ object DocQueries {
     var near: DataFrame = null
     var bg: DataFrame = null
     var hits: DataFrame = null
-    parWrite(Seq(
+    LsmIndex.parWrite(Seq(
       // (a) dedup + minhash index append (q110d's step, shared sh)
       () => near = ingestAndAppend(b, ib, is,
-        s"$deltaBandsDir/batch=$id", s"$deltaSetsDir/batch=$id",
-        graft.streaming.StreamingJobs.recordInnerPlan(
+        LsmIndex.deltaSegment(deltaBandsDir, id),
+        LsmIndex.deltaSegment(deltaSetsDir, id),
+        StreamingJobs.recordInnerPlan(
           s"q122_stream_ingest_capstone dedup batch=$id", _),
         prebuiltSh = Some(shAll.select(col("doc_id"), col("shingle")))),
       // (b) cumulative gram novelty + gram append (q117d's step)
@@ -5033,19 +4634,19 @@ object DocQueries {
         val bgL = shAll.select(col("source"), col("shingle")).distinct()
           .localCheckpoint()
         val hitsPlan = noveltyHits(bgL, gramRef)
-        graft.streaming.StreamingJobs.recordInnerPlan(
+        StreamingJobs.recordInnerPlan(
           s"q122_stream_ingest_capstone novelty batch=$id", hitsPlan)
         val hitsL = hitsPlan.localCheckpoint()
         novelGrams(bgL, hitsL)
-          .write.mode("overwrite").parquet(s"$gramDeltaDir/batch=$id")
+          .write.mode("overwrite")
+          .parquet(LsmIndex.deltaSegment(gramDeltaDir, id))
         bg = bgL; hits = hitsL
       }))
     // ---- fold at the cadence, all three relations in one step: prior
     // fold ∪ the delta tail THROUGH this batch lands at the immutable
-    // fold=<id> of each relation (bounded at O(fold + k) inputs;
-    // deltas at or below f are dead — lsmGc's food)
-    if ((id + 1) % k == 0)
-      lsmFoldAt(s, rels, f, id, () => crashMidFold(id))
+    // per-fold location of each relation (bounded at O(fold + k)
+    // inputs; deltas at or below f are dead — LsmIndex.gc's food)
+    LsmIndex.foldIfDue(s, rels, f, id, k, () => crashMidFold(id))
     // ---- (c) sink commits (torn-write injection point: all segments
     // landed, neither sink has — the worst at-least-once case)
     crashBeforeSink(id)
@@ -5053,7 +4654,7 @@ object DocQueries {
     // disjoint locations — one concurrent wave (the torn-write law
     // injects BEFORE either; a crash between them was always healed
     // by redelivery's overwrite)
-    parWrite(Seq(
+    LsmIndex.parWrite(Seq(
       () => noveltyReportFromHits(bg, hits).coalesce(1)
         .write.mode("overwrite").parquet(s"$novSinkDir/batch=$id"),
       () => dedupFunnel(b, near).coalesce(1)
@@ -5075,22 +4676,13 @@ object DocQueries {
       gc: Boolean = true): Unit = {
     val (iBands, iSets) = Tables.minhashIndexBase(s, dir)
     val grams = Tables.gramIndex(s, dir)
-    val q = graft.streaming.StreamingJobs.readDocsStream(s, replayDir)
-      .writeStream
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         id: Long) =>
-          streamCapstoneBatch(s, df, id, iBands, iSets, deltaBandsDir,
-            deltaSetsDir, foldBandsDir, foldSetsDir, grams,
-            gramDeltaDir, gramFoldDir, funnelSinkDir, novSinkDir, k,
-            crashBeforeSink, crashMidFold)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamingJobs.capturePlan(
-      "q122_stream_ingest_capstone", q)
+    StreamingJobs.drainDocs(s, replayDir, ckpt,
+      "q122_stream_ingest_capstone") { (df, id) =>
+      streamCapstoneBatch(s, df, id, iBands, iSets, deltaBandsDir,
+        deltaSetsDir, foldBandsDir, foldSetsDir, grams, gramDeltaDir,
+        gramFoldDir, funnelSinkDir, novSinkDir, k, crashBeforeSink,
+        crashMidFold)
+    }
     // POST-CHECKPOINT MAINTENANCE (round-18 verdict item 5): this is
     // the call site where a deployment runs the GC — after the drain,
     // every batch the checkpoint has committed is past its redelivery
@@ -5099,10 +4691,10 @@ object DocQueries {
     // Only reached on a CLEAN drain (a crash above threw before this
     // line), and a no-op when nothing has checkpointed (-1). Specs
     // that forensically inspect superseded segments pass gc = false.
-    if (gc) lsmGc(
+    if (gc) LsmIndex.gc(
       capstoneRels(iBands, iSets, deltaBandsDir, deltaSetsDir,
         foldBandsDir, foldSetsDir, grams, gramDeltaDir, gramFoldDir),
-      checkpointedBatchId(ckpt))
+      LsmIndex.checkpointedBatchId(ckpt))
   }
 
   /** Resolve the capstone's two change-log sinks to the wide
@@ -5134,7 +4726,7 @@ object DocQueries {
   private val q122 = QueryDef(
     "q122_stream_ingest_capstone",
     (s, dir) => {
-      val replay = graft.streaming.StreamingJobs.docsReplayDir(s, dir)
+      val replay = StreamingJobs.docsReplayDir(s, dir)
       def tmp(tag: String): String = Scratch.dir(s"graft-q122-$tag")
       val (dBands, dSets, cBands, cSets, gDelta, gFold, fSink, nSink,
         ckpt) =

@@ -1133,15 +1133,18 @@ object EmbeddingQueries {
     * assignment becomes a pure projection of `e`, so each Lloyd round
     * stops shuffling a corpus-sized relation. Tie-break identical:
     * least(struct(d2, cid)) is the same lexicographic (d2, cid) min as
-    * min(struct(d2, cid)) and is visit-order-free (R21Probe: diff rows
-    * = 0, and the fold measured ~2× faster at 32k vectors despite the
+    * min(struct(d2, cid)) and is visit-order-free (KMeansSpec: diff
+    * rows = 0; the fold measured ~2× faster at 32k vectors despite the
     * interpreted HOF lambda — the removed n·k materialization and
     * exchange dominate). Scale note: the array row needs k·268 B in
     * one cell (k ≤ ~7M under the 2 GB cell cap) — the same
     * broadcastable-k regime the old table form capped at (~8 GB / 30M
     * rows), and far above any kmK(n) a broadcast-kmeans deployment
-    * would run with a single codebook. */
-  private def kmAssign(e: DataFrame, cents: DataFrame)(
+    * would run with a single codebook. An EMPTY `cents` fails the
+    * projection loudly: the fold's seed (cid -1, d2 Long.MaxValue)
+    * would otherwise come out as every vector's assignment. The guard
+    * is the fold's finish lambda — no extra job, operator or exchange. */
+  private[graft] def kmAssign(e: DataFrame, cents: DataFrame)(
       implicit s: SparkSession): DataFrame = {
     import s.implicits._
     val centArr = cents
@@ -1152,7 +1155,9 @@ object EmbeddingQueries {
           "struct(CAST(9223372036854775807 AS BIGINT) AS d2, " +
           "CAST(-1 AS BIGINT) AS cid), " +
           "(acc, c) -> least(acc, " +
-          "struct(l2q(embedding, c.carr) AS d2, c.cid AS cid)))").as("m"),
+          "struct(l2q(embedding, c.carr) AS d2, c.cid AS cid)), " +
+          "acc -> IF(acc.cid < 0, " +
+          "raise_error('kmAssign: empty centroid set'), acc))").as("m"),
         $"embedding")
       .select($"vec_id", $"m.cid".as("cid"), $"m.d2".as("d2"), $"embedding")
   }
@@ -1182,7 +1187,7 @@ object EmbeddingQueries {
 
   /** k-lowest-id seed centroids: (cid 0..k-1 in id order, carr).
     * The k-row global window runs on a driver-side tiny relation. */
-  private def kmSeeds(e: DataFrame, k: Int)(
+  private[graft] def kmSeeds(e: DataFrame, k: Int)(
       implicit s: SparkSession): DataFrame = {
     import s.implicits._
     e.orderBy($"vec_id").limit(k)

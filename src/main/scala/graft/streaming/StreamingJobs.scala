@@ -482,6 +482,24 @@ object StreamingJobs {
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
 
+  /** Drain a docsReplayDir with AvailableNow, one `batch(data, batchId)`
+    * call per file, then record the stream's source plan under `name`
+    * (capturePlan). The ONE drain of the docs-replay streams (q110d,
+    * q110f, q116b, q117b, q117d, q117e, q122). The checkpoint at `ckpt`
+    * makes the drain resumable; delivery is at-least-once, so `batch`
+    * must be a pure function of (batchId, data) — each stream overwrites
+    * `batch=<id>` locations only. */
+  def drainDocs(spark: SparkSession, replayDir: String, ckpt: String,
+      name: String)(batch: (DataFrame, Long) => Unit): Unit = {
+    val q = readDocsStream(spark, replayDir).writeStream
+      .foreachBatch(batch)
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    capturePlan(name, q)
+  }
+
   /** foreachBatch sink with IDEMPOTENT per-batch writes (§2.B sinks —
     * the programmable-sink tier next to memory/console/parquet).
     * foreachBatch's delivery contract is AT-LEAST-ONCE: after a failure

@@ -72,12 +72,12 @@ object PlanDump {
     * first (round-15 verdict item 4). */
   private val streamPicks = Seq(
     "q110d_stream_index_dedup" -> "streaming incremental dedup — per-batch dedup vs base ∪ strictly-earlier deltas (`batch < id`), broadcast kept-id semis",
-    "q110f_stream_compaction"  -> "streaming compaction, compact-every-k cadence (k=1 here) — batch 0 dedups vs base then folds; batch 1 scans the immutable fold=0 segment alone (no base, no delta)",
+    "q110f_stream_compaction"  -> "streaming compaction, compact-every-k cadence (k=1 here) — batch 0 dedups vs base then folds; batch 1 scans the immutable fold 0 segment alone (no base, no delta)",
     "q116b_stream_drift"       -> "streaming drift — stateless |sources|-row count inside foreachBatch; corpus joined at read time",
     "q117b_stream_novelty"     -> "streaming novelty — bounded batch grams broadcast-semi against ONE pruned gram-index scan per batch",
     "q117d_stream_gram_append" -> "streaming cumulative gram append — per-batch probe of index ∪ strictly-earlier deltas (`batch < id`), novel grams appended as the batch's own segment",
-    "q117e_stream_gram_compaction" -> "streaming gram compaction, compact-every-k cadence (k=1 here) — batch 0 probes the base gram index then folds; batch 1 probes the immutable fold=0 segment alone",
-    "q122_stream_ingest_capstone" -> "streaming ingest capstone — ONE replay drain per batch: shared shingle pass feeds the dedup kernel AND the gram probe, both riding ONE compact-every-k fold cadence (k=1 here: batch 1's dedup and probe scan fold=0 segments alone)")
+    "q117e_stream_gram_compaction" -> "streaming gram compaction, compact-every-k cadence (k=1 here) — batch 0 probes the base gram index then folds; batch 1 probes the immutable fold 0 segment alone",
+    "q122_stream_ingest_capstone" -> "streaming ingest capstone — ONE replay drain per batch: shared shingle pass feeds the dedup kernel AND the gram probe, both riding ONE compact-every-k fold cadence (k=1 here: batch 1's dedup and probe scan fold 0 segments alone)")
 
   /** Replace per-run /tmp scratch paths (Scratch.dir and the replay
     * temp dirs — `createTempDirectory(tag)` = tag + a random digit
@@ -93,8 +93,60 @@ object PlanDump {
     text.replaceAll(
       "/tmp/(graft-[A-Za-z0-9.-]+?)\\d+(?![A-Za-z0-9.-])", "<$1>")
 
+  private def formatted(df: org.apache.spark.sql.DataFrame): String = {
+    val buf = new ByteArrayOutputStream()
+    Console.withOut(new PrintStream(buf, true, "UTF-8")) {
+      df.explain("formatted")
+    }
+    buf.toString("UTF-8").trim
+  }
+
+  /** Recorded inner plan keys of one streaming query, in batch order. */
+  private def innerKeysOf(name: String): Seq[String] =
+    graft.streaming.StreamingJobs.innerPlanKeys
+      .filter(_.startsWith(name + " "))
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    if (args.length >= 4)
+      dumpQueries(sfDir, args(1), args(2), args.drop(3).toSeq)
+    else if (args.length <= 1) writePlansMd(sfDir)
+    else {
+      System.err.println("usage: PlanDump [sfDir] | " +
+        "PlanDump <sfDir> <outDir> <tag> <query>...")
+      sys.exit(2)
+    }
+  }
+
+  /** Per-query form, for before/after plan evidence of one change:
+    *   sbt "runMain graft.tools.PlanDump <sfDir> <outDir> <tag> <query>..."
+    * writes `<outDir>/<query>_<tag>.txt` per named query: its formatted
+    * plan plus, for streaming queries, the recorded inner foreachBatch
+    * plans (the returned DataFrame is a sink read, so the per-batch
+    * kernels are the plans that matter). */
+  private def dumpQueries(sfDir: String, outDir: String, tag: String,
+      names: Seq[String]): Unit = {
+    val spark = Sessions.local("graft-plandump")
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val out = new StringBuilder
+      out ++= s"== $name ($tag) ==\n\n${formatted(df)}\n"
+      innerKeysOf(name).foreach { k =>
+        out ++= s"\n== recorded inner plan: $k ==\n\n"
+        out ++= graft.streaming.StreamingJobs.innerPlanOf(k).get.trim
+        out ++= "\n"
+      }
+      val dest = Paths.get(outDir, s"${name}_$tag.txt")
+      Files.writeString(dest, normalizeScratch(out.toString))
+      println(s"[plandump] wrote $dest")
+      graft.queries.QueryCaches.releaseAll()
+      graft.queries.Scratch.purge()
+    }
+    spark.stop()
+  }
+
+  private def writePlansMd(sfDir: String): Unit = {
     val spark = Sessions.local("graft-plandump")
     val out = new StringBuilder
     out ++= "# PLANS — formatted physical plans of representative queries\n\n"
@@ -104,19 +156,14 @@ object PlanDump {
     out ++= "`PlanShapeSpec`.\n"
     picks.foreach { case (name, why) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val buf = new ByteArrayOutputStream()
-      Console.withOut(new PrintStream(buf, true, "UTF-8")) {
-        df.explain("formatted")
-      }
-      out ++= s"\n## $name — $why\n\n```\n${buf.toString("UTF-8").trim}\n```\n"
+      out ++= s"\n## $name — $why\n\n```\n${formatted(df)}\n```\n"
     }
     var streamSections = 0
     streamPicks.foreach { case (name, why) =>
       // building the DataFrame RUNS the replay (the q44 caveat), which
       // records each micro-batch kernel's plan as a side effect
       SparkEntry.queries(name)(spark, sfDir)
-      val keys = graft.streaming.StreamingJobs.innerPlanKeys
-        .filter(_.startsWith(name + " "))
+      val keys = innerKeysOf(name)
       require(keys.nonEmpty, s"$name recorded no inner plans")
       out ++= s"\n## $name — $why (recorded inner foreachBatch plans)\n"
       keys.foreach { k =>

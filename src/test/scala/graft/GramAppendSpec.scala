@@ -104,8 +104,8 @@ class GramAppendSpec extends AnyFunSuite {
     val grams = Tables.gramIndex(spark, dir)
     val all = spark.read.parquet(replay)
     Seq(0L, 1L).foreach { id =>
-      DocQueries.streamGramBatch(spark,
-        all.filter(DocQueries.q110Mod === id), id, grams, delta, sink)
+      DocQueries.streamGramCompactBatch(spark,
+        all.filter(DocQueries.q110Mod === id), id, grams, delta, None, sink)
     }
     assert(snap() === before,
       "redelivered batches changed the sink or the gram segments")
@@ -262,11 +262,11 @@ class GramAppendSpec extends AnyFunSuite {
       grams.limit(0).select(col("gram"))
         .write.mode("overwrite").parquet(s"$delta/batch=-1")
       DocQueries.streamGramCompactBatch(spark,
-        all.filter(DocQueries.q110Mod === 0), 0L, grams, delta, fold,
+        all.filter(DocQueries.q110Mod === 0), 0L, grams, delta, Some(fold),
         sink)
       if (gc) TestSpark.rmr(s"$delta/batch=0")
       DocQueries.streamGramCompactBatch(spark,
-        all.filter(DocQueries.q110Mod === 1), 1L, grams, delta, fold,
+        all.filter(DocQueries.q110Mod === 1), 1L, grams, delta, Some(fold),
         sink)
       (DocQueries.streamGramTable(spark, sink)
           .collect().map(_.toSeq).toSeq,
@@ -297,11 +297,67 @@ class GramAppendSpec extends AnyFunSuite {
     val all = spark.read.parquet(replay)
     Seq(0L, 1L).foreach { id =>
       DocQueries.streamGramCompactBatch(spark,
-        all.filter(DocQueries.q110Mod === id), id, grams, delta, fold,
+        all.filter(DocQueries.q110Mod === id), id, grams, delta, Some(fold),
         sink)
     }
     assert(snap() === before,
       "redelivered batches changed the sink, a delta, or a fold")
+  }
+
+  // ---- four-batch cadence fixture: the mod-0 and mod-1 carves each
+  // split by doc_id parity — four genuine ingest batches
+  private lazy val fourBatches: Seq[org.apache.spark.sql.DataFrame] = {
+    val docsAll = Tables.load(spark, dir, "documents")
+      .select(col("doc_id"), col("source"), col("text"))
+    for (m <- Seq(0, 1); p <- Seq(0, 1))
+      yield docsAll.filter(DocQueries.q110Mod === m)
+        .filter(col("doc_id") % 2 === p)
+  }
+
+  test("q117e: k=2 cadence over four batches equals the uncompacted path batch for batch, on the sink and the live segments") {
+    // the gram twin of StreamIndexDedupSpec's k=2 cadence law: drive
+    // the same four-batch delivery through the no-fold (q117d) path and
+    // the compact-every-2 (q117e) path and compare after EVERY batch
+    // (a) the report so far and (b) the gram set a reader would probe
+    // next — base ∪ all deltas on the uncompacted side, the latest
+    // committed fold ∪ the deltas past it on the compacted side
+    val grams = Tables.gramIndex(spark, dir)
+    def tmp(t: String): String = java.nio.file.Files
+      .createTempDirectory(s"graft-gfk-$t").toString
+    val (ud, us) = (tmp("udelta"), tmp("usink"))
+    val (cd, cf, cs) = (tmp("cdelta"), tmp("cfold"), tmp("csink"))
+    def report(sink: String): Seq[Seq[Any]] =
+      DocQueries.streamGramTable(spark, sink).collect().map(_.toSeq).toSeq
+    def gramSet(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select(col("gram")).distinct().collect().map(_.getString(0)).toSet
+    def liveSegments(delta: String, fold: Option[String]): Set[String] = {
+      val folds = fold.toSeq.flatMap(f => new java.io.File(f).listFiles()
+        .filter(d => d.getName.startsWith("fold=") &&
+          new java.io.File(d, "_SUCCESS").exists())
+        .map(_.getName.stripPrefix("fold=").toLong))
+      val f = if (folds.isEmpty) -1L else folds.max
+      val head =
+        if (f < 0) grams.select(col("gram"))
+        else spark.read.parquet(s"${fold.get}/fold=$f")
+      gramSet(head.union(spark.read.parquet(delta)
+        .filter(col("batch") > f).select(col("gram"))))
+    }
+    fourBatches.zipWithIndex.foreach { case (b, id) =>
+      DocQueries.streamGramCompactBatch(spark, b, id.toLong, grams, ud,
+        None, us)
+      DocQueries.streamGramCompactBatch(spark, b, id.toLong, grams, cd,
+        Some(cf), cs, k = 2)
+      assert(report(us) === report(cs),
+        s"compacted report diverged from the uncompacted one at batch $id")
+      assert(liveSegments(ud, None) === liveSegments(cd, Some(cf)),
+        s"compacted live segments diverged from base ∪ deltas at batch $id")
+    }
+    assert(report(cs).map(_.head).toSet === Set(1L, 2L, 3L, 4L),
+      "four-batch delivery did not produce four sink partitions")
+    val folds = new java.io.File(cf).listFiles()
+      .filter(_.getName.startsWith("fold=")).map(_.getName).toSet
+    assert(folds === Set("fold=1", "fold=3"),
+      s"folds landed off-cadence: $folds")
   }
 
   test("probe plan: base∪delta index side broadcast-semi, never shuffled") {

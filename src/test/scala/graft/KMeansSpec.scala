@@ -87,6 +87,41 @@ class KMeansSpec extends AnyFunSuite {
       s"expected broadcast joins in q103:\n$fin")
   }
 
+  test("kmAssign equals the crossJoin + groupBy argmin it replaced, row for row") {
+    // the map-only HOF fold must pick the same (d2, cid) lexicographic
+    // minimum as the old |e|·k crossJoin + min(struct(d2, cid)) shape
+    import spark.implicits._
+    val e = Tables.load(spark, dir, "embeddings")
+      .select($"vec_id", $"embedding")
+    val cents = queries.EmbeddingQueries.kmSeeds(e, 32)(spark)
+      .localCheckpoint()
+    val oldAssign = e.crossJoin(broadcast(cents))
+      .withColumn("d2", expr("l2q(embedding, carr)"))
+      .groupBy($"vec_id")
+      .agg(min(struct($"d2", $"cid")).as("m"))
+      .select($"vec_id", $"m.cid".as("cid"), $"m.d2".as("d2"))
+    val newAssign = queries.EmbeddingQueries.kmAssign(e, cents)(spark)
+      .select($"vec_id", $"cid", $"d2")
+    val diff = oldAssign.except(newAssign).count() +
+      newAssign.except(oldAssign).count()
+    assert(diff === 0L, s"$diff rows differ between the two assignments")
+    assert(newAssign.count() === e.count())
+  }
+
+  test("kmAssign fails loudly on an empty centroid set") {
+    import spark.implicits._
+    val e = Tables.load(spark, dir, "embeddings")
+      .select($"vec_id", $"embedding")
+    val empty = queries.EmbeddingQueries.kmSeeds(e, 8)(spark).limit(0)
+    val thrown = intercept[Exception] {
+      queries.EmbeddingQueries.kmAssign(e, empty)(spark).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](thrown)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("kmAssign")),
+      s"the empty-centroid error does not name kmAssign: $thrown")
+  }
+
   test("l2q kernel: exact quantized squared distance, symmetric rounding") {
     import spark.implicits._
     val df = Seq(

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.lsm.LsmIndex
 import graft.queries.{DocQueries, Registry}
 import graft.streaming.StreamingJobs
 
@@ -87,9 +88,9 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$ds2/batch=-1")
     val all = spark.read.parquet(replay)
     Seq(0L, 1L).foreach { id =>
-      DocQueries.streamDedupBatch(spark,
+      DocQueries.streamCompactBatch(spark,
         all.filter(DocQueries.q110Mod === id), id, iBands, iSets,
-        db2, ds2, sink2)
+        db2, ds2, None, sink2)
     }
     assert(
       DocQueries.streamDedupTable(spark, sink2)
@@ -121,9 +122,9 @@ class StreamIndexDedupSpec extends AnyFunSuite {
     val (iBands, iSets) = Tables.minhashIndexBase(spark, dir)
     val all = spark.read.parquet(replay)
     Seq(0L, 1L).foreach { id =>
-      DocQueries.streamDedupBatch(spark,
+      DocQueries.streamCompactBatch(spark,
         all.filter(DocQueries.q110Mod === id), id,
-        iBands, iSets, db, ds, sink)
+        iBands, iSets, db, ds, None, sink)
     }
     assert(snap() === before,
       "redelivered batches changed the sink or the index segments")
@@ -328,8 +329,8 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       (cadenceTmp("db1"), cadenceTmp("ds1"), cadenceTmp("sink1"))
     seedDeltas(db, ds)
     fourBatches.zipWithIndex.foreach { case (b, id) =>
-      DocQueries.streamDedupBatch(spark, b, id.toLong, iBands, iSets,
-        db, ds, sink)
+      DocQueries.streamCompactBatch(spark, b, id.toLong, iBands, iSets,
+        db, ds, None, sink)
     }
     funnel(sink)
   }
@@ -350,7 +351,7 @@ class StreamIndexDedupSpec extends AnyFunSuite {
     seedDeltas(db2, ds2)
     fourBatches.zipWithIndex.foreach { case (b, id) =>
       DocQueries.streamCompactBatch(spark, b, id.toLong, iBands, iSets,
-        db2, ds2, cb, cs, sink2, k = 2)
+        db2, ds2, Some((cb, cs)), sink2, k = 2)
     }
     val f2 = funnel(sink2)
     assert(uncompactedFourBatch === f2,
@@ -403,7 +404,7 @@ class StreamIndexDedupSpec extends AnyFunSuite {
     seedDeltas(db2, ds2)
     fourBatches.zipWithIndex.foreach { case (b, id) =>
       DocQueries.streamCompactBatch(spark, b, id.toLong, iBands, iSets,
-        db2, ds2, cb, cs, sink2, k = if (id < 3) 3 else 2)
+        db2, ds2, Some((cb, cs)), sink2, k = if (id < 3) 3 else 2)
     }
     // fold=2 fired under k=3 (batches 0-2); batch 3 then folds again
     // under its own k=2 ((3+1) % 2 == 0) — both and nothing else
@@ -437,10 +438,10 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       cadenceTmp("cb3"), cadenceTmp("cs3"), cadenceTmp("sink3"))
     seedDeltas(db, ds)
     DocQueries.streamCompactBatch(spark, fourBatches(0), 0L,
-      iBands, iSets, db, ds, cb, cs, sink, k = 2)
+      iBands, iSets, db, ds, Some((cb, cs)), sink, k = 2)
     val thrown = intercept[RuntimeException] {
       DocQueries.streamCompactBatch(spark, fourBatches(1), 1L,
-        iBands, iSets, db, ds, cb, cs, sink, k = 2,
+        iBands, iSets, db, ds, Some((cb, cs)), sink, k = 2,
         crashMidFold =
           _ => throw new RuntimeException("torn-fold injection"))
     }
@@ -456,7 +457,7 @@ class StreamIndexDedupSpec extends AnyFunSuite {
     // batch 2 folds under the new cadence ((2+1) % 3 == 0)
     (1 to 3).foreach { id =>
       DocQueries.streamCompactBatch(spark, fourBatches(id), id.toLong,
-        iBands, iSets, db, ds, cb, cs, sink, k = 3)
+        iBands, iSets, db, ds, Some((cb, cs)), sink, k = 3)
     }
     assert(!new java.io.File(s"$cs/fold=1").exists(),
       "the retuned re-run resurrected the torn fold")
@@ -497,13 +498,13 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       seedDeltas(db, ds)
       DocQueries.streamCompactBatch(spark,
         all.filter(DocQueries.q110Mod === 0), 0L, iBands, iSets,
-        db, ds, cb, cs, sink)
+        db, ds, Some((cb, cs)), sink)
       if (gc) {
         TestSpark.rmr(s"$db/batch=0"); TestSpark.rmr(s"$ds/batch=0")
       }
       DocQueries.streamCompactBatch(spark,
         all.filter(DocQueries.q110Mod === 1), 1L, iBands, iSets,
-        db, ds, cb, cs, sink)
+        db, ds, Some((cb, cs)), sink)
       (DocQueries.streamDedupTable(spark, sink)
           .collect().map(_.toSeq).toSeq,
         spark.read.parquet(s"$cb/fold=1").select("doc_id").distinct()
@@ -530,18 +531,18 @@ class StreamIndexDedupSpec extends AnyFunSuite {
         cadenceTmp("cb4"), cadenceTmp("cs4"), cadenceTmp("sink4"))
       seedDeltas(db, ds)
       val rels = Seq(
-        DocQueries.LsmRelation(
+        LsmIndex.Relation(
           iBands.select("doc_id", "band_idx", "band_val"), db,
           Seq("doc_id", "band_idx", "band_val"), cb),
-        DocQueries.LsmRelation(iSets.select("doc_id", "ss", "n"), ds,
+        LsmIndex.Relation(iSets.select("doc_id", "ss", "n"), ds,
           Seq("doc_id", "ss", "n"), cs))
       def batch(id: Long): Unit =
         DocQueries.streamCompactBatch(spark, fourBatches(id.toInt), id,
-          iBands, iSets, db, ds, cb, cs, sink)
+          iBands, iSets, db, ds, Some((cb, cs)), sink)
       batch(0L); batch(1L) // k=1: fold=0 and fold=1 both commit
       if (gc) {
         // batch 1 committed its fold but "has not checkpointed yet"
-        assert(DocQueries.lsmGc(rels, 0L) === 0L)
+        assert(LsmIndex.gc(rels, 0L) === 0L)
         assert(new java.io.File(s"$cb/fold=0", "_SUCCESS").exists() &&
           new java.io.File(s"$cb/fold=1", "_SUCCESS").exists() &&
           new java.io.File(s"$db/batch=1").exists(),
@@ -560,7 +561,7 @@ class StreamIndexDedupSpec extends AnyFunSuite {
         assert(new java.io.File(s"$cs/fold=0", "_SUCCESS").delete())
         // now batch 1 checkpoints: fold=0 (committed OR torn) and
         // delta-1 are dead
-        assert(DocQueries.lsmGc(rels, 1L) === 1L)
+        assert(LsmIndex.gc(rels, 1L) === 1L)
         assert(!new java.io.File(s"$cb/fold=0").exists() &&
           !new java.io.File(s"$cs/fold=0").exists() &&
           !new java.io.File(s"$db/batch=1").exists(),
@@ -608,7 +609,7 @@ class StreamIndexDedupSpec extends AnyFunSuite {
     Seq(0L, 1L).foreach { id =>
       DocQueries.streamCompactBatch(spark,
         all.filter(DocQueries.q110Mod === id), id,
-        iBands, iSets, db, ds, cb, cs, sink)
+        iBands, iSets, db, ds, Some((cb, cs)), sink)
     }
     assert(snap() === before,
       "redelivered batches changed the sink, a delta, or the compacted segment")
